@@ -8,8 +8,12 @@ of the batch is a bulk backfill and stays real-time
 (KafkaRealTimeWorker.java:370-384).
 
 Pure DataFrame logic so the same function serves the batch path and
-``foreachBatch``: per-day counts are a tiny aggregate broadcast back —
-no second shuffle of the data, just one scan + one broadcast-join.
+``foreachBatch``: one aggregate job brings the batch total and the
+candidate backfill days to the driver, and both outputs are row filters
+of ``df`` itself. No join and no union, so inside ``foreachBatch`` both
+outputs keep reading the epoch's cached frame; a self-join re-instances
+the frame's leaf, misses the cache and re-runs the source and the
+stateful dedup under it.
 """
 
 from __future__ import annotations
@@ -29,24 +33,27 @@ def split_late(df: DataFrame, time_col: str = "_time",
                promote_min_records: int = PROMOTE_MIN_RECORDS,
                promote_min_fraction: float = PROMOTE_MIN_FRACTION,
                ) -> tuple[DataFrame, DataFrame]:
-    """Return (realtime, historical). Null event times go historical
-    (the reference can't classify them either — they'd fail the day
-    window). ``now`` pins the reference's wall-clock for tests."""
+    """Return (realtime, historical), two disjoint filters of ``df``.
+    Null event times go historical (the reference can't classify them
+    either — they'd fail the day window). ``now`` pins the reference's
+    wall-clock for tests."""
     day = F.to_date(F.col(time_col))
     today = F.to_date(F.lit(now)) if now is not None else F.current_date()
-    fresh = day.isNotNull() & (day >= F.date_sub(today, outdated_day_index)) \
-        & (day <= today)
+    fresh = (day >= F.date_sub(today, outdated_day_index)) & (day <= today)
 
-    total = df.count()   # batch-local, same as the reference's buffer size
-    promoted = (df.groupBy(day.alias("_d"))
-                .agg(F.count("*").alias("_n"))
-                .filter((F.col("_n") > promote_min_records)
-                        & (F.col("_n") > promote_min_fraction * total))
-                .select("_d", F.lit(True).alias("_promoted")))
+    # One rollup job: the grand-total row (grouping id 1) plus the days
+    # with more than promote_min_records rows. At most
+    # 1 + total / promote_min_records rows reach the driver.
+    counts = (df.rollup(day.alias("_d"))
+              .agg(F.count("*").alias("_n"), F.grouping_id().alias("_g"))
+              .filter((F.col("_g") == 1)
+                      | (F.col("_d").isNotNull()
+                         & (F.col("_n") > promote_min_records)))
+              .collect())
+    total = sum(r["_n"] for r in counts if r["_g"] == 1)
+    promoted = [r["_d"] for r in counts
+                if r["_g"] == 0 and r["_n"] > promote_min_fraction * total]
 
-    tagged = df.withColumn("_d", day).join(
-        F.broadcast(promoted), on="_d", how="left")
-    keep = fresh | F.col("_promoted").isNotNull()
-    realtime = tagged.filter(keep).drop("_d", "_promoted")
-    historical = tagged.filter(~keep | keep.isNull()).drop("_d", "_promoted")
-    return realtime, historical
+    # null day → historical
+    keep = F.coalesce(fresh | day.isin(promoted), F.lit(False))
+    return df.filter(keep), df.filter(~keep)

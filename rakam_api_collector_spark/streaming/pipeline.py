@@ -107,7 +107,7 @@ def _spool_corrupt_frames(batch: DataFrame, errors_dir: str,
     """Write ``_kind=='corrupt'`` binary frames as replayable parquet
     with cheap forensics columns — same stream/epoch keying, overwrite
     idempotence, and empty-batch skip as ``_spool_dead_letters``."""
-    bad = batch.filter(F.col("_kind") == "corrupt")
+    bad = _of_kind(batch, "corrupt")
     if bad.isEmpty():
         return
     (bad.select("value",
@@ -466,6 +466,9 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
                   .dropDuplicatesWithinWatermark(["_dk_user", "_dk_time"]))
 
     def process(batch: DataFrame, epoch_id: int) -> None:
+        # every frame below is a filter of this cache: a self-join or
+        # self-union re-instances its leaf, misses the cache and re-runs
+        # the source read and the RocksDB dedup under it
         batch = batch.select("value", "_event_time").cache()
         tables = None
         try:
@@ -513,7 +516,7 @@ def start_ingest_stream(spark: SparkSession, source_dir: str, fmt: str,
             else:
                 # no K3 channel: late records stay on the hot path
                 # (the batch-parity posture tests rely on), and the
-                # split — whose re-promotion rule costs a count() job
+                # split — whose re-promotion rule costs an aggregate job
                 # per micro-batch — is never planned at all
                 hot = splittable
             tables = ingest_batch(spark, hot.select("value"), fmt, catalog,
@@ -576,12 +579,20 @@ class AvroBatchResult(dict):
             df.unpersist()
 
 
-def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
-                        get_columns, project: str,
+def _of_kind(frames: DataFrame, kind: str) -> DataFrame:
+    """The routed Avro frames of one ``_kind``: ``stream``, ``bulk``
+    or ``corrupt`` (ingest.avro.extract_stream_routing)."""
+    return frames.filter(F.col("_kind") == kind)
+
+
+def _decode_avro_frames(spark: SparkSession, stream: DataFrame,
+                        bulk: DataFrame, get_columns, project: str,
                         default_collection: str | None,
                         bulk_base: str | None) -> AvroBatchResult:
-    """Typed tables from one micro-batch of routed Avro frames
-    (columns ``_kind, _collection, value``).
+    """Typed tables from one micro-batch of routed Avro frames: the
+    ``_kind == 'stream'`` records (columns ``_collection, value``) and
+    the ``_kind == 'bulk'`` pointers (column ``value``), passed apart so
+    a caller can hand each in as a plain filter of one cached frame.
 
     Collections are grouped by SCHEMA SIGNATURE and each group decodes
     in ONE mapInPandas pass (the decoder emits ``_collection`` in-band,
@@ -603,8 +614,8 @@ def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
 
     tables = AvroBatchResult()
 
-    colls = [r[0] for r in (frames.filter(F.col("_kind") == "stream")
-                            .select("_collection").distinct().collect())]
+    colls = [r[0] for r in
+             stream.select("_collection").distinct().collect()]
     groups: dict[tuple, list[str]] = {}
     for coll in sorted(c for c in colls if c is not None):
         fields = get_columns(project, coll)
@@ -616,8 +627,7 @@ def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
     for sig, group in groups.items():
         fields = get_columns(project, group[0])
         typed = decode_stream_records(
-            frames.filter((F.col("_kind") == "stream")
-                          & F.col("_collection").isin(group))
+            stream.filter(F.col("_collection").isin(group))
             .select("value"),
             fields, default_collection=default_collection)
         if len(group) > 1:
@@ -631,8 +641,7 @@ def _decode_avro_frames(spark: SparkSession, frames: DataFrame,
             tables[(project, coll)] = (
                 typed.filter(F.col("_collection") == coll).select(*names))
 
-    ptrs = (frames.filter(F.col("_kind") == "bulk")
-            .select("value").collect())
+    ptrs = bulk.select("value").collect()
     if ptrs:
         if bulk_base is None:
             raise ValueError("bulk pointer received but no bulk_base "
@@ -728,20 +737,25 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                   .dropDuplicatesWithinWatermark(["_dk_user", "_dk_time"]))
 
     def process(batch: DataFrame, epoch_id: int) -> None:
+        # as on the JSON path, every frame below is a filter of this
+        # cache — never a self-join or self-union of it
         batch = (batch.select("_kind", "_collection", "value",
                               "_event_time").cache())
         tables = None
         try:
+            records = _of_kind(batch, "stream")
             if historical_dir is not None:
                 # K3: spool raw FRAMES (not typed rows) for the slow
                 # worker — parquet with a single binary column, the
                 # file-system analog of the historical Kafka topic.
-                # Only well-formed stream records are late-split: bulk
-                # pointers carry no event time and must resolve on the
+                # Only well-formed stream records are late-split. Bulk
+                # pointers carry no event time and resolve on the
                 # realtime path (the reference fetches bulk objects
-                # immediately, AvroMessageEventTransformer.java:87-99),
-                # and corrupt frames stay hot so ST11 accounting sees
-                # them — neither ever enters the spool.
+                # immediately, AvroMessageEventTransformer.java:87-99);
+                # corrupt frames are counted and dead-lettered. Neither
+                # ever enters the spool, and both reach their consumers
+                # as their own filters of `batch`, not unioned back onto
+                # the split's realtime side.
                 # Same replay posture as the JSON path: classification
                 # clock pinned to the epoch's first attempt, spool
                 # append epoch-marker idempotent (_pinned_epoch_date /
@@ -751,25 +765,20 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                 eff_now = now if now is not None else \
                     _pinned_epoch_date(spark, checkpoint, epoch_id,
                                        meta)
-                rt, hist = split_late(
-                    batch.filter(F.col("_kind") == "stream"),
-                    time_col="_event_time",
+                records, hist = split_late(
+                    records, time_col="_event_time",
                     outdated_day_index=outdated_day_index, now=eff_now)
                 _handoff_once(
                     checkpoint, epoch_id,
                     lambda: hist.select("value").write.mode("append")
                     .parquet(historical_dir), meta)
-                hot = batch.filter(F.col("_kind") != "stream") \
-                    .unionByName(rt)
-            else:
-                hot = batch
             if errors_dir is not None:
                 # dead-letter spool: raw frame + cheap forensics cols;
                 # stays hot-path-exact because corrupt never spools
                 _spool_corrupt_frames(batch, errors_dir, epoch_id)
             tables = _decode_avro_frames(
-                spark, hot, get_columns, project, default_collection,
-                bulk_base)
+                spark, records, _of_kind(batch, "bulk"), get_columns,
+                project, default_collection, bulk_base)
             out = tables
             if shard_time is not None:
                 out = {k: df.withColumn(
@@ -789,7 +798,7 @@ def start_avro_ingest_stream(spark: SparkSession, source_dir: str | None,
                 # PRE-SPLIT batch: corrupt frames never divert to the
                 # spool (they stay hot), but counting the full batch
                 # keeps the invariant independent of routing details.
-                n_bad = batch.filter(F.col("_kind") == "corrupt").count()
+                n_bad = _of_kind(batch, "corrupt").count()
                 n_ok = 0
                 for (p, c), df in tables.items():
                     n = df.count()
@@ -862,8 +871,8 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
             # decode pass — cache so counts don't re-run routing
             batch = batch.cache()
         tables = _decode_avro_frames(
-            spark, batch, get_columns, project, default_collection,
-            bulk_base)
+            spark, _of_kind(batch, "stream"), _of_kind(batch, "bulk"),
+            get_columns, project, default_collection, bulk_base)
         try:
             out = tables
             if shard_time is not None:
@@ -883,8 +892,7 @@ def start_avro_historical_stream(spark: SparkSession, historical_dir: str,
                         stats.add(p, c, n)
                     n_ok += n
                 if error_monitor is not None:
-                    n_bad = batch.filter(
-                        F.col("_kind") == "corrupt").count()
+                    n_bad = _of_kind(batch, "corrupt").count()
                     error_monitor.record(ok=n_ok, failed=n_bad)
                     if error_monitor.should_kill():
                         raise RuntimeError(

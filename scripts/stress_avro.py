@@ -29,7 +29,8 @@ from rakam_api_collector_spark.ingest.catalog import Catalog
 from rakam_api_collector_spark.session import get_spark
 from rakam_api_collector_spark.sinks import write_collections
 from rakam_api_collector_spark.streaming.latesplit import split_late
-from rakam_api_collector_spark.streaming.pipeline import _decode_avro_frames
+from rakam_api_collector_spark.streaming.pipeline import (_decode_avro_frames,
+                                                        _of_kind)
 
 BASE_MS = 1704067200000   # 2024-01-01T00:00:00Z
 DAY_MS = 86_400_000
@@ -91,7 +92,7 @@ def main() -> None:
     rt, hist = split_late(routed, time_col="_event_time",
                           outdated_day_index=1, now="2024-01-31")
     tables = _decode_avro_frames(
-        spark, rt.select("_kind", "_collection", "value"),
+        spark, _of_kind(rt, "stream"), _of_kind(rt, "bulk"),
         catalog.get_columns, "stress", None, None)
     out = {k: df.withColumn(
         "_shard_time",

@@ -115,6 +115,12 @@ def test_avro_late_split_spools_and_replays(spark, tmp_path):
         historical_dir=str(hist_dir), now=NOW, shard_time=SHARD_T)
     q.awaitTermination(120)
 
+    # each epoch ran the stateful dedup once: a self-join or self-union
+    # of the cached epoch frame re-runs it, and the source, per action
+    ops = [p.stateOperators[0] for p in q.recentProgress if p.numInputRows]
+    assert ops and all(op.numStateStoreInstances == op.numShufflePartitions
+                       for op in ops)
+
     hot = read_collection(spark, str(tmp_path / "tables"), "p1", "t", cat)
     assert [r["v"] for r in hot.collect()] == [1.0]
 
@@ -330,7 +336,7 @@ def test_avro_stream_vs_batch_end_state_parity(spark, tmp_path):
     tables: same schema, same rows, per collection. The JSON path pins
     this; this is the Avro twin."""
     from rakam_api_collector_spark.streaming.pipeline import (
-        _decode_avro_frames)
+        _decode_avro_frames, _of_kind)
 
     cat = Catalog(str(tmp_path / "catalog.json"))
     f_t = cat.create_table("p1", "t", EXTRA)            # v double
@@ -378,8 +384,9 @@ def test_avro_stream_vs_batch_end_state_parity(spark, tmp_path):
     bbase = tmp_path / "tables_batch"
     raw = spark.createDataFrame([(f,) for f in frames], "value binary")
     routed = extract_stream_routing(raw, cat.get_columns, "p1")
-    tables = _decode_avro_frames(spark, routed, cat.get_columns, "p1",
-                                 None, str(bulk_base))
+    tables = _decode_avro_frames(spark, _of_kind(routed, "stream"),
+                                 _of_kind(routed, "bulk"), cat.get_columns,
+                                 "p1", None, str(bulk_base))
     try:
         out = {k: df.withColumn(
             "_shard_time", F.coalesce(
@@ -421,11 +428,11 @@ def test_avro_decode_groups_by_schema_not_collection(spark, tmp_path):
             collection=c)
         for i, c in enumerate(("a", "b", "c"))]
     df = spark.createDataFrame(
-        [("stream", c, f) for c, f in zip(("a", "b", "c"), frames)],
-        "_kind string, _collection string, value binary")
+        [(c, f) for c, f in zip(("a", "b", "c"), frames)],
+        "_collection string, value binary")
 
-    tables = _decode_avro_frames(spark, df, cat.get_columns, "p1",
-                                 None, None)
+    tables = _decode_avro_frames(spark, df, df.limit(0), cat.get_columns,
+                                 "p1", None, None)
     try:
         assert set(tables) == {("p1", c) for c in ("a", "b", "c")}
         assert len(tables._caches) == 1          # one decode, cached

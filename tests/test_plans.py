@@ -660,3 +660,23 @@ def test_sigstore_broadcast_guard_degrades_to_shuffle_join(spark):
     rows = {r["doc_id"]: (r["keep"], r["matched_id"])
             for r in v_guarded.collect()}
     assert rows  # non-empty batch produced verdicts under the guard
+
+
+def test_late_split_filters_the_cached_frame(spark):
+    """split_late's two outputs are row filters of its input — no join,
+    no broadcast — so inside foreachBatch both read the epoch's cached
+    frame instead of re-running the source and the stateful dedup."""
+    from rakam_api_collector_spark.streaming import split_late
+
+    days = ["2020-06-01"] * 10 + ["2020-05-01"] * 30 + ["2020-04-01"] * 5
+    df = (spark.createDataFrame([(d,) for d in days], ["_time"])
+          .select(F.col("_time").cast("timestamp")).cache())
+    try:
+        rt, hist = split_late(df, now="2020-06-01", promote_min_records=20)
+        assert (rt.count(), hist.count()) == (40, 5)   # one day promoted
+        for out in (rt, hist):
+            plan = plan_of(out, mode="simple")
+            assert "InMemoryTableScan" in plan
+            assert "Join" not in plan and "BroadcastExchange" not in plan
+    finally:
+        df.unpersist()

@@ -31,26 +31,47 @@ def _ts_df(spark, ts_list):
         .select(F.col("_time").cast("timestamp"))
 
 
+def _split_counts(df, **kw):
+    """(realtime, historical) row counts of split_late(df), after
+    checking the two sides are disjoint and together give back df."""
+    rt, hist = split_late(df, now=NOW, **kw)
+    rt_rows, hist_rows = rt.collect(), hist.collect()
+
+    def key(r):
+        return (r[0] is None, r[0])
+    assert sorted(rt_rows + hist_rows, key=key) == \
+        sorted(df.collect(), key=key)
+    return len(rt_rows), len(hist_rows)
+
+
 def test_split_late_day_window(spark):
-    rt, hist = split_late(
-        _ts_df(spark, ["2020-06-01 10:00:00", "2020-05-31 09:00:00",
-                       "2020-05-29 08:00:00", None]),
-        now=NOW, outdated_day_index=1)
-    assert rt.count() == 2          # today + yesterday
-    assert hist.count() == 2        # old day + null time
+    df = _ts_df(spark, ["2020-06-01 10:00:00", "2020-05-31 09:00:00",
+                        "2020-05-29 08:00:00", None])
+    # today + yesterday | old day + null time
+    assert _split_counts(df, outdated_day_index=1) == (2, 2)
+    # thresholds every day passes: the old day is promoted, the null
+    # time never is
+    assert _split_counts(df, outdated_day_index=1, promote_min_records=0,
+                         promote_min_fraction=0.0) == (3, 1)
 
 
 def test_split_late_repromotion(spark):
     """An old day with >N records and >25% of the batch is a backfill
-    and stays real-time (KafkaRealTimeWorker.java:370-384)."""
+    and stays real-time (KafkaRealTimeWorker.java:370-384); both
+    thresholds are strict."""
     old_bulk = ["2020-05-01 00:00:00"] * 30
     fresh = ["2020-06-01 00:00:00"] * 10
     stray = ["2020-04-01 00:00:00"] * 5
-    rt, hist = split_late(_ts_df(spark, old_bulk + fresh + stray),
-                          now=NOW, promote_min_records=20,
-                          promote_min_fraction=0.25)
-    assert rt.count() == 40         # fresh + promoted bulk day
-    assert hist.count() == 5        # stray old day below both thresholds
+    at_min = ["2020-05-02 00:00:00"] * 20    # == N, and > 25% of 66
+    df = _ts_df(spark, old_bulk + fresh + stray + at_min + [None])
+    # fresh + promoted bulk day | stray day below both thresholds, the
+    # day at exactly N records, the null time
+    assert _split_counts(df, promote_min_records=20,
+                         promote_min_fraction=0.25) == (40, 26)
+    at_fraction = ["2020-05-01 00:00:00"] * 25   # > N, == 25% of 100
+    df = _ts_df(spark, at_fraction + ["2020-06-01 00:00:00"] * 75)
+    assert _split_counts(df, promote_min_records=20,
+                         promote_min_fraction=0.25) == (75, 25)
 
 
 # --- end-to-end stream -------------------------------------------------------
@@ -142,10 +163,16 @@ def test_stream_dead_letter_with_historical_split(spark, tmp_path):
         spark, str(src), "fabric", cat,
         table_base=str(tmp_path / "tables"),
         checkpoint=str(tmp_path / "ckpt"),
-        now=NOW, shard_time=SHARD_T, dedup=False,
+        now=NOW, shard_time=SHARD_T, dedup=True,
         historical_dir=str(tmp_path / "hist"),
         errors_dir=str(tmp_path / "errors"), error_monitor=mon)
     q.awaitTermination(120)
+
+    # each epoch ran the stateful dedup once: a self-join or self-union
+    # of the cached epoch frame re-runs it, and the source, per action
+    ops = [p.stateOperators[0] for p in q.recentProgress if p.numInputRows]
+    assert ops and all(op.numStateStoreInstances == op.numShufflePartitions
+                       for op in ops)
 
     dead = spark.read.parquet(str(tmp_path / "errors")).collect()
     assert [r.value for r in dead] == [not_json]
